@@ -42,3 +42,33 @@ def duck():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def jobs_launched(spark):
+    """``jobs_launched(fn) -> (fn(), n)``: ``n`` is the number of Spark
+    jobs ``fn`` launched, counted through a job group with the status
+    tracker. The tracker is fed asynchronously by the listener bus, so
+    a sentinel job launched afterwards is awaited first: once it is
+    visible, every earlier job is too."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group, sentinel = (f"probe-{uuid.uuid4().hex}" for _ in range(2))
+        sc.setJobGroup(group, "job-count probe")
+        try:
+            out = fn()
+        finally:
+            sc.setJobGroup(sentinel, "job-count sentinel")
+            sc.parallelize([0], 1).count()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.time() + 30
+        while not tracker.getJobIdsForGroup(sentinel) and time.time() < deadline:
+            time.sleep(0.05)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

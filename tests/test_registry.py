@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import re
 
+import pytest
+
 from walden_spark.registry import load_all
 
 
@@ -267,3 +269,16 @@ def test_queries_and_oracles_consistent():
     assert set(osql) <= set(qs)
     assert all(callable(f) for f in qs.values())
     assert all(isinstance(s, str) and s.strip() for s in osql.values())
+
+
+def test_changed_def_names_fails_loud_on_a_failed_diff():
+    """A git diff that fails must not read as "nothing changed" — that
+    would let the body-changed guard above pass vacuously."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "tools"))
+    from rotation_queue import changed_def_names
+
+    with pytest.raises(RuntimeError, match="git diff"):
+        changed_def_names(ref="no-such-ref-" + "0" * 8)

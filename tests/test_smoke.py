@@ -383,3 +383,78 @@ def test_catalog_dml_write_lock(spark, tmp_path):
         assert spark.table("walden_lock_t").filter("id = 0").collect()[0].v == 0.0
     finally:
         spark.sql("DROP TABLE IF EXISTS walden_lock_t")
+
+
+def test_second_builder_call_runs_no_spark_job(spark, sf_dir, jobs_launched):
+    """Fixture schemas are remembered per session: a second build of
+    tpch_q8 (seven fixture tables, nation scanned twice) launches no job before
+    its action, and its result is unchanged."""
+    from walden_spark.registry import load_all
+
+    q8 = load_all()["tpch_q8"].fn
+    first = q8(spark, sf_dir).collect()
+    df, jobs = jobs_launched(lambda: q8(spark, sf_dir))
+    assert jobs == 0
+    assert df.collect() == first
+
+
+def test_fixture_rewritten_in_place_yields_new_schema(spark, tmp_path):
+    """The memo key holds the file's (size, mtime_ns): a fixture file
+    rewritten at the same path with another schema is read with it."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from walden_spark.tables import load_table
+
+    path = tmp_path / "region.parquet"
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey", "r_name"]
+    pq.write_table(pa.table({"r_regionkey": [7], "r_comment": ["c"], "w": [1.5]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert df.dtypes == [("r_regionkey", "bigint"), ("r_comment", "string"), ("w", "double")]
+    assert [tuple(r) for r in df.collect()] == [(7, "c", 1.5)]
+
+
+def test_reader_conf_flip_reinfers_like_a_fresh_read(spark, tmp_path):
+    """Reader confs that change inferred types are part of the memo
+    key: after flipping nanosAsLong (or binaryAsString) a read gives
+    exactly what fresh inference gives — a bigint, or the same error."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from walden_spark.tables import read_parquet
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(
+        pa.table(
+            {
+                "ts": pa.array([1_000_000_123], pa.timestamp("ns")),
+                "raw": pa.array([b"x"], pa.binary()),
+            }
+        ),
+        path,
+    )
+
+    def schema_or_error(read):
+        try:
+            return read().schema
+        except Exception as e:  # noqa: BLE001 - compared, not swallowed
+            return type(e).__name__
+
+    confs = {
+        "spark.sql.legacy.parquet.nanosAsLong": ("true", "false", "true"),
+        "spark.sql.parquet.binaryAsString": ("false", "true", "false"),
+    }
+    prev = {k: spark.conf.get(k) for k in confs}
+    try:
+        for key, flags in confs.items():
+            for flag in flags:
+                spark.conf.set(key, flag)
+                want = schema_or_error(lambda: spark.read.parquet(path))
+                assert schema_or_error(lambda: read_parquet(spark, path)) == want
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.conf.set("spark.sql.parquet.binaryAsString", "true")
+        assert read_parquet(spark, path).dtypes == [("ts", "bigint"), ("raw", "string")]
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)

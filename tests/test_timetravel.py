@@ -3640,3 +3640,100 @@ def test_optimize_manifests_sql_surface(spark, vt):
     head = {m["version"]: m for m in vt._manifests()}[r.version]
     assert "schema_project" in head and head["parent"] == 0
     assert sorted(tuple(x) for x in vt.read().collect()) == pre
+
+
+def test_eq_delete_run_batches_across_key_order(spark, tmp_path, monkeypatch):
+    """Consecutive equality-delete/upsert commits keyed on the same
+    columns in a different order are ONE batched run in read_changes
+    (key sets compared, not key lists), and the feed equals the
+    per-commit replay of the same range."""
+    t = VersionedTable(spark, str(tmp_path / "kt"))
+    t.write(
+        spark.createDataFrame(
+            [(i, i % 3, float(i)) for i in range(12)], "a long, b long, v double"
+        )
+    )
+    t.delete_keys(
+        spark.createDataFrame([(1, 1), (2, 2)], "a long, b long"), on=["a", "b"]
+    )  # v1
+    t.upsert_keys(
+        spark.createDataFrame(
+            [(3, 0, 30.0), (50, 2, 5.0)], "a long, b long, v double"
+        ),
+        on=["b", "a"],
+    )  # v2: updates (3, 0), inserts (50, 2)
+    t.delete_keys(
+        spark.createDataFrame([(2, 50), (0, 6)], "b long, a long"), on=["b", "a"]
+    )  # v3: deletes the upserted row and a base row
+
+    runs = []
+    batched = VersionedTable._eq_delete_run_changes
+
+    def spy(self, run, *args, **kwargs):
+        runs.append([m["version"] for m in run])
+        return batched(self, run, *args, **kwargs)
+
+    monkeypatch.setattr(VersionedTable, "_eq_delete_run_changes", spy)
+    cols = ["a", "b", "v", "_change_type", "_commit_version"]
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    whole = rows(t.read_changes(0, 3))
+    assert runs == [[1, 2, 3]]
+    per_commit = sorted(
+        rows(t.read_changes(0, 1)) + rows(t.read_changes(1, 2)) + rows(t.read_changes(2, 3))
+    )
+    assert runs == [[1, 2, 3]]  # single-commit ranges never batch
+    assert whole == per_commit
+    assert (50, 2, 5.0, "delete", 3) in whole and (6, 0, 6.0, "delete", 3) in whole
+
+
+def test_second_resolve_runs_no_spark_job(spark, vt, jobs_launched):
+    """Layer schemas are remembered per session: once a snapshot has
+    been resolved, resolving it again launches no schema-inference job
+    (the read itself stays lazy, so read() runs no job at all)."""
+    vt.append(spark.createDataFrame([(100, 1.0)], "id long, v double"))
+    vt.delete_keys(spark.createDataFrame([(3,)], "id long"), on=["id"])
+    vt.upsert_keys(spark.createDataFrame([(4, 40.0)], "id long, v double"), on=["id"])
+    vt.delete_where("id = 5", mode="mor")
+    from walden_spark.tables import _SCHEMAS
+
+    _SCHEMAS.pop(spark, None)  # cold memo: the commits above resolved layers
+    _, first = jobs_launched(vt.read)
+    assert first > 0  # the probe sees the inference jobs of a cold read
+    df, again = jobs_launched(vt.read)
+    assert again == 0
+    assert sorted(r.id for r in df.collect()) == [0, 1, 2, 4, 6, 7, 8, 9, 100]
+    # a pruned scan reuses the same schemas (file subset, same layer)
+    _, scan_jobs = jobs_launched(lambda: vt.scan(filters=[("id", ">=", 7)]))
+    assert scan_jobs == 0
+
+
+def test_dropped_layer_dirs_leave_no_schema_entries(spark, vt):
+    """expire_versions and remove_orphans drop the remembered schemas
+    of the directories they delete."""
+    import os
+
+    from walden_spark.tables import _SCHEMAS, read_parquet
+
+    for i in range(3):
+        vt.append(spark.createDataFrame([(200 + i, 1.0)], "id long, v double"))
+    vt.read().collect()
+    vt.compact()
+    old_dirs = {m["data_dir"] for m in vt._manifests() if m.get("data_dir")}
+
+    def remembered():
+        return {key[0] for key in _SCHEMAS.get(spark, {})}
+
+    assert old_dirs - {vt._manifests()[-1]["data_dir"]} <= remembered()
+    vt.expire_versions(keep_last=1)
+    gone = {d for d in old_dirs if not os.path.exists(d)}
+    assert gone and not gone & remembered()
+
+    orphan = f"{vt.path}/data/orphan-x"
+    spark.createDataFrame([(1,)], "id long").write.parquet(orphan)
+    read_parquet(spark, orphan).collect()
+    assert orphan in remembered()
+    assert orphan in vt.remove_orphans(older_than_s=0)
+    assert orphan not in remembered()

@@ -143,8 +143,13 @@ def changed_def_names(repo_root: str = REPO, ref: str | None = None) -> set[str]
         capture_output=True,
         text=True,
     )
+    if res.returncode != 0:
+        # an empty diff would make every body-changed guard pass vacuously
+        raise RuntimeError(
+            f"git diff --name-only {ref} failed ({res.returncode}): {res.stderr.strip()}"
+        )
     changed: set[tuple[str, str]] = set()
-    for f in res.stdout.split():
+    for f in res.stdout.splitlines():
         if not f.endswith(".py"):
             continue
         mod = f[:-3].replace("/", ".")

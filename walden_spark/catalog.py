@@ -257,14 +257,15 @@ class Catalog:
                 exprs.append(f"{fn.upper()}({src}) AS {out}")
         keys = meta["keys"]
         staging = _staging_dir(self.spark)
-        self.spark.sql(
+        agg = self.spark.sql(
             f"SELECT {', '.join(keys)}, {', '.join(exprs)} "
             f"FROM {_q(meta['base'])} GROUP BY {', '.join(keys)}"
-        ).write.mode("overwrite").parquet(staging)
+        )
+        agg.write.mode("overwrite").parquet(staging)
         try:
-            self.spark.read.parquet(staging).write.mode("overwrite").insertInto(
-                name, overwrite=True
-            )
+            self.spark.read.schema(agg.schema).parquet(staging).write.mode(
+                "overwrite"
+            ).insertInto(name, overwrite=True)
         finally:
             _rm_path(self.spark, staging)
         nrows = self.spark.table(name).count()
@@ -352,11 +353,12 @@ class Catalog:
     def refresh_materialized_view(self, name: str) -> None:
         select_sql = self.materialized_view_query(name)
         staging = _staging_dir(self.spark)
-        self.spark.sql(select_sql).write.mode("overwrite").parquet(staging)
+        view = self.spark.sql(select_sql)
+        view.write.mode("overwrite").parquet(staging)
         try:
-            self.spark.read.parquet(staging).write.mode("overwrite").insertInto(
-                name, overwrite=True
-            )
+            self.spark.read.schema(view.schema).parquet(staging).write.mode(
+                "overwrite"
+            ).insertInto(name, overwrite=True)
         finally:
             _rm_path(self.spark, staging)
 
@@ -494,11 +496,12 @@ class Catalog:
         rewritten = transform(scope)
         # Stage under the warehouse (executor-reachable on a cluster;
         # driver-local /tmp is not), then break the self-overwrite
-        # lineage by reading the staged copy back. Cleaned up in finally.
+        # lineage by reading the staged copy back — with the schema just
+        # written, so no inference job. Cleaned up in finally.
         staging = _staging_dir(spark)
         rewritten.write.mode("overwrite").parquet(staging)
         try:
-            staged = spark.read.parquet(staging)
+            staged = spark.read.schema(rewritten.schema).parquet(staging)
             prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
             try:
                 if partition_pred is not None:
@@ -778,7 +781,9 @@ def compact_table(
     staging = _staging_dir(spark)
     compacted.write.mode("overwrite").parquet(staging)
     try:
-        spark.read.parquet(staging).write.mode("overwrite").insertInto(name, overwrite=True)
+        spark.read.schema(compacted.schema).parquet(staging).write.mode(
+            "overwrite"
+        ).insertInto(name, overwrite=True)
     finally:
         _rm_path(spark, staging)
     return n_files
@@ -859,7 +864,9 @@ def zorder_table(
     staging = _staging_dir(spark)
     clustered.write.mode("overwrite").parquet(staging)
     try:
-        spark.read.parquet(staging).write.mode("overwrite").insertInto(name, overwrite=True)
+        spark.read.schema(clustered.schema).parquet(staging).write.mode(
+            "overwrite"
+        ).insertInto(name, overwrite=True)
     finally:
         _rm_path(spark, staging)
     return n_files

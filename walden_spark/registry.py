@@ -64,96 +64,91 @@ def query(name: str, oracle: Optional[str] = None, category: str = "", tags: tup
 # representative of everything; remaining queries follow in module
 # order. tests/test_registry.py asserts the coverage property.
 #
-# r15 ROTATION (VERDICT r14 next-round #1): window policy is now
-# BODY-CHANGED FIRST, STALENESS SECOND. Every query whose execution
-# was rewritten in r14/r15 without a driver witness on the new body is
-# front-loaded (DRIVER_WINDOW_BODY_CHANGED below — the curated
-# authority; tools/rotation_queue.py::body_changed_queries derives an
+# r16 ROTATION: window policy stays BODY-CHANGED FIRST, STALENESS
+# SECOND (VERDICT r14 #1). The r14/r15 body-changed set was fully
+# green in CORRECTNESS_r15.json and leaves the window; the new
+# DRIVER_WINDOW_BODY_CHANGED (below — the curated authority;
+# tools/rotation_queue.py::body_changed_queries derives an
 # over-approximate tripwire from git+AST and the guard asserts every
-# changed def has at least one implicated window witness). The
-# remaining 9 slots are the stalest oracle-backed member of each
-# category the curated set leaves uncovered (the every-family
-# property); two of those (fn_array_zip, source_python_stream) also
-# drain the r07 stale tail, as do 7 of the curated names. The rest of
-# the r07 tail queues for r16.
+# changed def has at least one implicated window witness) holds the
+# queries whose read path was rewritten to reuse resolved Parquet
+# schemas. Then the whole r07 stale tail (24 names, drained in one
+# cut), the stalest oracle-backed member of each category still
+# uncovered (the every-family property), and the stalest remaining
+# oracle-backed names fill the last slots.
 #
 # DRIVER_WINDOW_ROUND marks which round this window was cut FOR; the
 # rotation drift-guard (tests/test_registry.py +
 # tools/rotation_queue.py::window_guard_violations) uses it to stay
 # green at the round boundary, and as of r09 the boundary arm demands
 # FULL green (rows+schema+hash), not merely err-free.
-DRIVER_WINDOW_ROUND = 15
+DRIVER_WINDOW_ROUND = 16
 
-# Queries whose EXECUTION changed in r14/r15 with no driver witness on
-# the changed body (VERDICT r14 "what's wrong" #1). r14 rewrites:
-# fact-first q10/q13, single-scan q18, single-scan quantile sketch,
-# distinct-first approx_distinct, projected salting, one-pass text
-# quality filter, checkpointed rollup ladder, map-side IVF argmax,
-# norm-hoisted LSH/semantic cosine kernels, shingle projection
-# (ngram/minhash/source_overlap/repetition/decontaminate), fused
-# connected-components convergence probe, and the streaming family
-# (state right-sizing, one-job replay staging, empty-emit guards,
-# within-batch persists). r15 rewrites: vectorized sessionize +
-# single-chunk batch concat (all stateful matchers), Hadoop-FS state
-# sizing (all bounded replays), batched eq-delete-run CDF pre-images
-# (read_changes: ddl/streaming change-feed + incremental MVs), and the
-# pruned multimodal decode boundary.
+# Queries whose EXECUTION changed in r16 with no driver witness on the
+# changed body: layer, delete-file, CDF and add_files reads of
+# versioned tables through the session schema memo (time travel,
+# equality/position deletes, change feed incl. key-set run detection,
+# maintenance that drops memo entries), copy-on-write and MV-refresh
+# staging reads with the written schema, and fixture reads without the
+# per-accessor Tables cache (tpch_q8 scans nation twice).
 DRIVER_WINDOW_BODY_CHANGED: tuple[str, ...] = (
-    "tpch_q10",
-    "tpch_q13",
-    "tpch_q18",
-    "agg_quantile_sketch",
-    "agg_approx_distinct",
-    "skew_salted_agg",
-    "text_quality_filter_per_source",
-    "text_repetition",
-    "text_decontaminate",
-    "events_hypertable_rollup",
-    "events_user_components",
-    "ann_ivf_probe",
-    "dedup_embedding_lsh",
-    "dedup_cluster_components",
-    "dedup_ngram_jaccard",
-    "dedup_minhash_lsh",
-    "dedup_source_overlap",
-    "streaming_stateful_timeout_sessions",
-    "streaming_pattern_vshape",
-    "streaming_pattern_skip_next",
-    "streaming_pattern_alternation",
-    "streaming_pattern_mixed_define",
-    "streaming_pattern_same_class",
-    "streaming_anomaly_weekly",
-    "streaming_tumbling",
-    "streaming_session_window",
-    "streaming_sliding",
-    "streaming_dedup_watermark",
-    "streaming_stateful_totals",
-    "streaming_stream_stream_join",
-    "streaming_minhash_dedup",
-    "streaming_ivf_ingest",
-    "streaming_static_join",
-    "streaming_available_now",
-    "ddl_incremental_mv",
+    "tpch_q8",
+    "ddl_time_travel",
+    "ddl_eq_delete_lifecycle",
+    "ddl_pos_delete_lifecycle",
     "ddl_change_feed",
-    "streaming_change_feed",
-    "streaming_incremental_mv",
-    "multimodal_decode",
-    "multimodal_resize",
-    "multimodal_frame_sample",
+    "ddl_add_files",
+    "ddl_maintenance_lifecycle",
+    "ddl_dml_cow",
+    "ddl_materialized_view",
 )
 
 DRIVER_WINDOW: tuple[str, ...] = DRIVER_WINDOW_BODY_CHANGED + (
+    # -- the r07 stale tail (stalest full-green witness) --
+    "agg_stats_builtin",
+    "agg_map_entries",
+    "agg_min_max_by",
+    "agg_filter_clause",
+    "agg_bool_bit",
+    "agg_having",
+    "fn_conditional",
+    "fn_uuid_typeof",
+    "events_json_agg",
+    "events_dedup_exact",
+    "ddl_ctas_view",
+    "ddl_shallow_clone",
+    "ddl_partition_evolution",
+    "tpcds_fx_hour_bands",
+    "tpcds_fx_cumulative_channels",
+    "tpcds_fx_trip_bands",
+    "text_fingerprint",
+    "text_pii_scan",
+    "text_chunking",
+    "text_stratified_sample",
+    "text_sequence_pack",
+    "text_shard_shuffle",
+    "text_weighted_sample",
     # -- family coverage: stalest oracle-backed member of each
-    # category the body-changed set leaves uncovered --
-    "sample_bernoulli",  # filter, r10
-    "fn_array_zip",  # function, r07 (drains the stale tail)
-    "join_asof",  # join, r08
-    "proj_case_cast",  # projection (sole member), r14
-    "source_python_stream",  # scan, r07 (drains the stale tail)
-    "setop_except",  # setop, r12
-    "topn_per_group",  # sort, r11
-    "posexplode_ordinality",  # unnest, r13
-    "win_exclude_current",  # window, r09
+    # category the names above leave uncovered --
+    "source_csv_roundtrip",  # scan, r08
+    "dedup_exact",  # dedup, r08
+    "range_join_binned",  # join, r08
+    "ann_pq_rerank",  # similarity, r08
+    "win_pattern_vshape",  # window, r09
+    "multimodal_dedup_exact",  # multimodal, r10
+    "filter_predicates",  # filter, r11
+    "topk_with_ties",  # sort, r12
+    "setop_union_all",  # setop, r12
+    "streaming_foreachbatch_upsert",  # streaming, r12
+    "explode_words",  # unnest, r14
+    "proj_case_cast",  # projection (sole member), r15
+    # -- stalest remaining (r08) --
+    "agg_basic",
+    "agg_collect_sorted",
+    "fn_datetime",
+    "events_interpolate",
+    "ddl_introspection",
+    "ddl_export_snapshot",
 )
 
 

@@ -96,6 +96,11 @@ def get_spark(
         # killing row-group/file skipping on every time column; int64
         # micros is the modern layout every engine reads and stats-prunes
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
+        # load_table sets this for the events fixture (int64-ns ts, see
+        # tables.normalize_event_ts); on from the start, it never flips
+        # mid-session, and a flip would re-key every remembered Parquet
+        # schema (tables.read_parquet) and re-run its inference job
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Runtime bloom-filter join pruning — the non-partition-key
         # analog of dynamic partition pruning (together they cover what
@@ -1050,7 +1055,12 @@ class WaldenSession:
         return self.spark.table(name)
 
     def read_parquet(self, path: str) -> DataFrame:
-        return self.spark.read.parquet(path)
+        """Fresh relation over ``path``; the schema is inferred only the
+        first time this session reads the path in its current state
+        (:func:`walden_spark.tables.read_parquet`)."""
+        from walden_spark.tables import read_parquet
+
+        return read_parquet(self.spark, path)
 
     def explain_cost(self, query: str) -> str:
         """Pre-execution cost estimate (reference: Superset

@@ -7,15 +7,24 @@ orders lineitem events documents embeddings.
 Notes:
 * ``events.ts`` is parquet timestamp[ns]; Spark reads it as TimestampNTZ
   at µs precision — we normalize to TimestampType (session TZ = UTC).
-* Loaders are plain ``spark.read.parquet`` — columnar scan with filter
-  pushdown and column pruning handled by Catalyst; no caching here so
-  each query's ``.explain`` shows the true scan.
+* Loaders return a fresh ``spark.read.schema(s).parquet`` relation per
+  call — columnar scan with filter pushdown and column pruning handled
+  by Catalyst, the file listing taken anew, and each query's
+  ``.explain`` showing the true scan. No data is cached. Only the
+  Parquet schema ``s`` is remembered (:func:`read_parquet`), so a
+  fixture whose file is unchanged skips Spark's schema-inference job —
+  the metadata-only planning an Iceberg/Hive catalog gives a reader.
 """
 
 from __future__ import annotations
 
+import os
+import threading
+import weakref
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 TABLE_NAMES = [
     "region",
@@ -33,6 +42,117 @@ TABLE_NAMES = [
 # Small dimensions that should always be broadcast in joins at any SF:
 # region/nation are fixed-size (5/25 rows at every scale factor).
 BROADCAST_DIMS = {"region", "nation"}
+
+# Reader confs that change what Parquet schema inference yields (column
+# types, or which footers are consulted); part of every memo key, so a
+# flipped conf — ``load_table`` sets nanosAsLong for ``events`` — infers
+# afresh instead of reusing a schema resolved under the old value.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.parquet.respectSummaryFiles",
+)
+
+# session → {(path, identity, inference confs): resolved schema}
+_SCHEMAS: "weakref.WeakKeyDictionary[SparkSession, dict[tuple, StructType]]" = (
+    weakref.WeakKeyDictionary()
+)
+_SCHEMAS_LOCK = threading.Lock()
+
+
+def local_fs_path(path: str) -> str | None:
+    """The OS path when ``path`` is on the local filesystem (bare or
+    file:), else None — what may be stat-ed and read with plain OS
+    calls instead of a JVM round-trip."""
+    if path.startswith("file:"):
+        from urllib.parse import unquote, urlparse
+
+        return unquote(urlparse(path).path)
+    if "://" not in path:
+        return path
+    return None
+
+
+def file_identity(path: str):
+    """What changes when the Parquet data at a local ``path`` changes:
+    ``(size, mtime_ns)`` of a file, or the sorted ``(relative path,
+    size, mtime_ns)`` of every file under a directory. None when the
+    path is not on the local filesystem or does not exist."""
+    path = local_fs_path(path)
+    if path is None:
+        return None
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not os.path.isdir(path):
+        return (st.st_size, st.st_mtime_ns)
+    out = []
+    for dirpath, _dirs, names in os.walk(path):
+        for n in names:
+            fp = os.path.join(dirpath, n)
+            try:
+                fst = os.stat(fp)
+            except OSError:
+                continue  # deleted mid-walk: the next read sees the change
+            out.append((os.path.relpath(fp, path), fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+def read_parquet(
+    spark: SparkSession,
+    path: str,
+    identity=None,
+    files: list[str] | None = None,
+) -> DataFrame:
+    """``spark.read.parquet(path)`` — or of ``files`` under the base
+    directory ``path`` — without Spark's schema-inference job when this
+    session has already resolved ``path`` in the same state.
+
+    The result is always a fresh ``spark.read.schema(s).parquet(...)``
+    relation, so the file listing stays current; only the schema ``s``
+    is remembered, per session, keyed by ``(path, identity, inference
+    confs)``. ``identity`` is any hashable naming the files' state: a
+    versioned-table layer passes the file list its manifest records
+    (layer directories are write-once); the default is
+    :func:`file_identity`. Without an identity (a path off the local
+    filesystem) every call infers. Entries of a deleted directory are
+    dropped by :func:`forget_parquet_schemas`; nothing else evicts."""
+    if identity is None:
+        identity = file_identity(path)
+        if identity is None:
+            return spark.read.parquet(path)
+    key = (path, identity, tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    memo = _SCHEMAS.get(spark)
+    schema = memo.get(key) if memo is not None else None
+    if schema is None:
+        # misses infer under the lock: threads missing the same key at
+        # once run its job once, so a session's job count does not
+        # depend on thread interleaving
+        with _SCHEMAS_LOCK:
+            memo = _SCHEMAS.setdefault(spark, {})
+            schema = memo.get(key)
+            if schema is None:
+                schema = memo[key] = spark.read.parquet(path).schema
+    reader = spark.read.schema(schema)
+    if files is None:
+        return reader.parquet(path)
+    # basePath keeps partition-dir columns parseable when addressing
+    # individual files
+    return reader.option("basePath", path).parquet(*files)
+
+
+def forget_parquet_schemas(paths) -> None:
+    """Drop every session's remembered schemas of ``paths`` (called when
+    those directories are deleted)."""
+    gone = set(paths)
+    with _SCHEMAS_LOCK:  # every memo write holds it too
+        for memo in _SCHEMAS.values():
+            for key in [k for k in memo if k[0] in gone]:
+                del memo[key]
 
 
 def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -68,8 +188,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # Legacy conf is runtime-settable so it works under any
         # caller-provided session; harmless when ts is already µs.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return normalize_event_ts(spark.read.parquet(f"{sf_dir}/{name}.parquet"))
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        return normalize_event_ts(read_parquet(spark, f"{sf_dir}/{name}.parquet"))
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def fast_row_count(sf_dir: str, name: str) -> int:
@@ -94,18 +214,21 @@ def register_views(spark: SparkSession, sf_dir: str, names=None) -> None:
 
 
 class Tables:
-    """Lazy accessor: ``t = Tables(spark, sf_dir); t.lineitem``."""
+    """Lazy accessor: ``t = Tables(spark, sf_dir); t.lineitem``.
+
+    Every attribute access is a fresh :func:`load_table` relation (two
+    uses of ``t.nation`` in one builder are two independent scans, as
+    two ``FROM nation`` in SQL are). No per-accessor cache: the
+    session-wide schema memo of :func:`read_parquet` already makes a
+    repeated load free of Spark jobs."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self._spark = spark
         self._sf_dir = sf_dir
-        self._cache: dict[str, DataFrame] = {}
 
     def __getattr__(self, name: str) -> DataFrame:
         if name.startswith("_"):
             raise AttributeError(name)
         if name not in TABLE_NAMES:
             raise AttributeError(f"unknown fixture table {name!r}")
-        if name not in self._cache:
-            self._cache[name] = load_table(self._spark, self._sf_dir, name)
-        return self._cache[name]
+        return load_table(self._spark, self._sf_dir, name)
